@@ -505,11 +505,32 @@ def pq_codebooks(corpus: DataFrame, m: int = 8, ks: int = 16,
     return books
 
 
+def _check_books(books: list[list[list[float]]] | None, m: int, ks: int,
+                 train: str | None, sample_mod: int | None) -> None:
+    """Reject caller-trained codebooks that cannot be what the caller
+    asked for. Encoding uses the ``m`` argument while ADC scoring and
+    the persisted cell rows use ``len(books)``, so a mis-shaped model
+    would silently mis-score instead of failing; a trainer setting
+    passed alongside a ready model would be silently ignored."""
+    if books is None:
+        return
+    if train is not None or sample_mod is not None:
+        raise ValueError(
+            "books is an already-trained model: train/sample_mod "
+            "cannot apply to it -- pass one or the other"
+        )
+    if len(books) != m or any(len(b) != ks for b in books):
+        raise ValueError(
+            f"books must be m={m} codebooks of ks={ks} cells each, got "
+            f"{len(books)} codebooks of {sorted({len(b) for b in books})} cells"
+        )
+
+
 def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             m: int = 8, ks: int = 16, refine: int = 32,
             id_col: str = "vec_id", vec_col: str = "embedding",
             max_iter: int = 3, sample_mod: int | None = None,
-            train: str = "local",
+            train: str | None = None,
             books: list[list[list[float]]] | None = None) -> DataFrame:
     """PQ approximate top-k: encode the corpus as m codes, score
     queries by asymmetric-distance inner product, exact-re-rank the
@@ -545,12 +566,14 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     (hash-ordered sample, fixed seed), so sharing the trained model
     yields bit-identical results to retraining -- the caller owns that
     contract, exactly as with ``corpus_index`` in the admission
-    operator.
+    operator. Its shape must be ``m`` codebooks of ``ks`` cells, and
+    ``train``/``sample_mod`` may not be passed with it (ValueError).
     """
+    _check_books(books, m, ks, train, sample_mod)
     corpus = spread_input(corpus)
     if books is not None:
         pass  # caller-trained model; skip the training collect
-    elif train == "local":
+    elif train in (None, "local"):
         if sample_mod is not None:
             raise ValueError(
                 "sample_mod tunes the DISTRIBUTED trainer; the local "
@@ -653,7 +676,7 @@ def _pq_search(coded: DataFrame, books: list[list[list[float]]],
 def build_pq_index(corpus: DataFrame, index_path: str, m: int = 8,
                    ks: int = 16, id_col: str = "vec_id",
                    vec_col: str = "embedding",
-                   train: str = "local",
+                   train: str | None = None,
                    books: list[list[list[float]]] | None = None) -> dict:
     """Materialize a PQ index as ONE versioned table: ``code`` rows
     (one per corpus vector: id + m small codes) and ``cell`` rows (the
@@ -671,6 +694,7 @@ def build_pq_index(corpus: DataFrame, index_path: str, m: int = 8,
     keep their pinned version, and a crashed rebuild is invisible.
     Returns {version, n_vectors}.
     """
+    _check_books(books, m, ks, train, None)
     corpus = spread_input(corpus)
     from ..sinks.versioned import VersionedTable
 
@@ -684,7 +708,7 @@ def build_pq_index(corpus: DataFrame, index_path: str, m: int = 8,
         pass
     elif train == "portable":
         books = _portable_books(corpus, m, ks, id_col, vec_col)
-    elif train == "local":
+    elif train in (None, "local"):
         books = pq_codebooks_local(
             corpus, m=m, ks=ks, id_col=id_col, vec_col=vec_col,
         )

@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 #: Configs applied to every session this engine builds. Each one is a
 #: conscious scale decision, not a magic number:
@@ -113,3 +114,34 @@ def release_persistent_rdds(spark: SparkSession) -> None:
     it = jmap.values().iterator()
     while it.hasNext():
         it.next().unpersist(False)
+
+
+def local_frame(spark: SparkSession, rows, schema: str | T.StructType
+                ) -> DataFrame:
+    """A small driver-built frame (listings, status and ledger rows)
+    that the JVM plans as a ``LocalTableScan``.
+
+    ``spark.createDataFrame(<python list>, ddl)`` plans as
+    ``Scan ExistingRDD`` over a Python RDD, so every job that reads it
+    starts PySpark Python workers -- and ``coalesce(1)`` over its
+    default slices starts them one after another inside one task.
+    Handing the same rows over as a pyarrow ``Table`` with the matching
+    Arrow schema runs no Python worker and does not depend on
+    ``spark.sql.execution.arrow.pyspark.enabled``: a one-row
+    ``coalesce(1)`` parquet write drops from ~0.9 s to ~0.17 s on a
+    4-core machine. Column order, types and nullability
+    are exactly those of ``schema``; ``rows`` are tuples in that order.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct)
+    rows = list(rows)
+    cols = list(zip(*rows, strict=True)) if rows else [()] * len(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type)
+         for c, f in zip(cols, arrow_schema, strict=True)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

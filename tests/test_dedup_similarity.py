@@ -598,6 +598,73 @@ def test_pq_persisted_index_matches_direct_search(spark, emb, tmp_path):
     assert again == direct
 
 
+def _books(m: int, ks: int, dsub: int = 8) -> list[list[list[float]]]:
+    return [[[float(j + c)] * dsub for c in range(ks)] for j in range(m)]
+
+
+@pytest.mark.parametrize("m, ks", [(7, 16), (8, 15), (9, 16)])
+def test_pq_rejects_misshaped_books(spark, emb, tmp_path, m, ks):
+    """Caller-passed codebooks must be m codebooks of ks cells: a
+    mismatch would encode with one shape and score with another."""
+    from dataingestionengineprocess_spark.operators.quantize import (
+        build_pq_index,
+        pq_topk,
+    )
+
+    books = _books(m, ks)
+    queries = emb.filter(F.col("vec_id") < 3)
+    with pytest.raises(ValueError, match="codebooks"):
+        pq_topk(emb, queries, m=8, ks=16, books=books)
+    with pytest.raises(ValueError, match="codebooks"):
+        build_pq_index(emb, str(tmp_path / "idx"), m=8, ks=16, books=books)
+    assert not (tmp_path / "idx").exists()
+
+
+def test_pq_rejects_trainer_settings_with_books(spark, emb, tmp_path):
+    """`train`/`sample_mod` tune a trainer; passed beside a ready
+    model they would be silently ignored."""
+    from dataingestionengineprocess_spark.operators.quantize import (
+        build_pq_index,
+        pq_topk,
+    )
+
+    books = _books(8, 16)
+    queries = emb.filter(F.col("vec_id") < 3)
+    with pytest.raises(ValueError, match="train/sample_mod"):
+        pq_topk(emb, queries, books=books, sample_mod=4)
+    with pytest.raises(ValueError, match="train/sample_mod"):
+        pq_topk(emb, queries, books=books, train="distributed")
+    with pytest.raises(ValueError, match="train/sample_mod"):
+        build_pq_index(emb, str(tmp_path / "idx"), books=books,
+                       train="local")
+
+
+def test_prefix_filter_releases_caches_on_failure(spark, monkeypatch):
+    """An exception after the shingle and token-set persists must not
+    leave their cached RDDs pinned for the rest of the session."""
+    from dataingestionengineprocess_spark.operators.dedup import (
+        prefix_filter_jaccard_pairs,
+    )
+
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    def fail_after_materializing(self, *args, **kwargs):
+        self.count()  # builds both cached relations
+        raise RuntimeError("checkpoint failed")
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox {i % 3} jumps") for i in range(12)],
+        "doc_id long, text string",
+    )
+    before = persistent_ids()
+    monkeypatch.setattr(type(docs), "localCheckpoint",
+                        fail_after_materializing)
+    with pytest.raises(RuntimeError, match="checkpoint failed"):
+        prefix_filter_jaccard_pairs(docs, threshold=0.5)
+    assert persistent_ids() - before == set()
+
+
 def test_semantic_dedup_oversized_cluster_salt_split(spark):
     """A degenerate corpus (one cluster swallowing everything) must
     salt-split into bounded shards: the prune still runs, every drop
